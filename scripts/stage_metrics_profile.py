@@ -23,7 +23,7 @@ within one run, bytes/tasks are exact and run_s/cpu_s are per-task sums
 MEASURED CAVEAT (round 11): in local mode the driver IS the executor,
 so the status store's own memory/GC pressure inflates late-suite
 run_s/cpu_s when the full registry is profiled in one session with
-100k retained stages — z94's run_s read 12.6 s at suite position ~350
+100k retained stages — one entry's run_s read 12.6 s at suite position ~350
 vs 1.6 s isolated in a fresh JVM (identical code, identical tasks).
 Treat full-suite absolute numbers as NOT bench-comparable; compare
 only side-by-side profiles taken the same way, or isolate the queries

@@ -1,5 +1,4 @@
-"""bench.py harness units: headline filter edge shapes and the
-worktree A/B drift adjudication (round-4 verdict #5)."""
+"""bench.py harness units: headline filter edge shapes."""
 
 from __future__ import annotations
 
@@ -21,137 +20,3 @@ def test_compact_headline_filter_shapes():
     }
     head = bench._compact(out)["queries"]
     assert head == {"q01_a": 1.0}
-
-
-def test_adjudicate_regressions_empty_short_circuit():
-    assert bench._adjudicate_regressions({}, "/nonexistent") == {}
-
-
-def test_adjudicate_regressions_worktree_ab(tmp_path):
-    """Same code on both sides of the A/B (HEAD vs the baseline-commit
-    worktree, re-timed back-to-back in fresh JVMs) must adjudicate a
-    fake flagged regression as machine drift — and clean up its
-    worktree. ~4 JVM startups (ABBA: H,B,B,H), the price of trusting BENCH regression
-    flags."""
-    import subprocess
-
-    regs = {"q01_pricing_summary": {"sec": 99.0, "baseline_sec": 0.1, "ratio": 990.0}}
-    out = bench._adjudicate_regressions(regs, "/root/testdata/sf0.001")
-    adj = out["q01_pricing_summary"]["adjudication"]
-    assert adj["verdict"] == "drift", adj
-    assert adj["head_sec"] > 0 and adj["baseline_code_sec"] > 0
-    wt = subprocess.run(
-        ["git", "worktree", "list"], capture_output=True, text=True, cwd="/root/repo"
-    ).stdout
-    assert "bench_ab_" not in wt
-
-
-def test_ab_verdict_needs_relative_and_scaled_absolute_gap():
-    # jitter shapes: big ratio on a small absolute delta, or big delta
-    # at a small ratio — both drift
-    assert bench._ab_verdict(0.5, 0.39) == "drift"      # q52 shape: delta 0.11
-    assert bench._ab_verdict(0.72, 0.56) == "drift"     # s09 shape: delta 0.16 < 0.35*base
-    assert bench._ab_verdict(10.0, 8.5) == "drift"      # ratio 1.18
-    # sub-second: ratio must clear 1.5, not just 1.25
-    assert bench._ab_verdict(0.7, 0.5) == "drift"       # ratio 1.4 < 1.5 at <1s
-    # a real regression clears both bars
-    assert bench._ab_verdict(2.0, 1.0) == "confirmed"
-    assert bench._ab_verdict(0.9, 0.5) == "confirmed"   # ratio 1.8, delta 0.4
-    assert bench._ab_verdict(13.0, 10.0) == "confirmed" # big query: bar capped at 0.5
-
-
-def test_near_miss_drift_tracker_units():
-    """scripts/check_near_miss_drift.py: the consecutive-repeat logic
-    (round-6 verdict #6) — a query near-missing in >=2 consecutive
-    evaluated rounds is a repeat; gaps and non-adjacent rounds are not."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "check_near_miss_drift",
-        os.path.join(os.path.dirname(__file__), "..", "scripts", "check_near_miss_drift.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    # adjacent rounds, same name -> repeat spanning both
-    reps = mod.consecutive_repeats([(5, {"qa"}), (6, {"qa", "qb"}), (7, {"qa"})])
-    assert reps == {"qa": [5, 6, 7]}
-    # non-adjacent (round gap) -> no repeat
-    assert mod.consecutive_repeats([(5, {"qa"}), (7, {"qa"})]) == {}
-    # a no-data round (None) breaks the streak conservatively
-    assert mod.consecutive_repeats([(5, {"qa"}), (6, None), (7, {"qa"})]) == {}
-    # different names never repeat
-    assert mod.consecutive_repeats([(5, {"qa"}), (6, {"qb"})]) == {}
-    # two DISJOINT streaks both report in full (round-7 review finding:
-    # the second streak's starting round was dropped)
-    assert mod.consecutive_repeats(
-        [(5, {"qa"}), (6, {"qa"}), (7, set()), (8, {"qa"}), (9, {"qa"})]
-    ) == {"qa": [5, 6, 8, 9]}
-    # a 1-round reappearance after a gap is not a repeat
-    assert mod.consecutive_repeats(
-        [(5, {"qa"}), (6, {"qa"}), (7, set()), (8, {"qa"})]
-    ) == {"qa": [5, 6]}
-
-
-def test_near_miss_repeats_are_escalated_in_baseline_md():
-    """Run the tracker over the repo's real BENCH_r*.json files: any
-    repeated near-miss must have an isolated re-time entry in
-    BASELINE.md (the round-6 verdict's escalation discipline) — slow
-    creep on sub-second queries must not accumulate silently."""
-    import importlib.util
-    import os
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    spec = importlib.util.spec_from_file_location(
-        "check_near_miss_drift",
-        os.path.join(repo, "scripts", "check_near_miss_drift.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    rounds = [(rnd, mod.near_misses(path)) for rnd, path in mod.round_files()]
-    repeats = mod.consecutive_repeats(rounds)
-    if not repeats:
-        return
-    baseline_md = open(os.path.join(repo, "BASELINE.md")).read()
-    unescalated = [name for name in repeats if name not in baseline_md]
-    assert not unescalated, (
-        f"near-miss repeats {unescalated} lack a BASELINE.md re-time entry "
-        f"(full repeat map: {repeats})"
-    )
-
-
-def test_git_provenance_excludes_bench_artifacts(tmp_path):
-    """Round-9 protocol fix: BENCH_HISTORY/BENCH_LOCAL became tracked
-    in round 8, after which every bench run dirtied the tree for the
-    NEXT run and the 3-clean-run median anchor could never be
-    satisfied. bench's own output artifacts must not count as
-    dirtiness; any other tracked modification must."""
-    import subprocess
-
-    import bench
-
-    def git(*args):
-        subprocess.run(["git", *args], cwd=tmp_path, check=True,
-                       capture_output=True)
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    for name in ("BENCH_HISTORY.jsonl", "BENCH_LOCAL.json", "code.py"):
-        (tmp_path / name).write_text("x\n")
-    git("add", "-A")
-    git("commit", "-q", "-m", "init")
-    sha, dirty = bench._git_provenance(str(tmp_path))
-    assert len(sha) == 40 and not dirty
-    # bench artifacts modified -> still clean
-    (tmp_path / "BENCH_HISTORY.jsonl").write_text("y\n")
-    (tmp_path / "BENCH_LOCAL.json").write_text("y\n")
-    assert bench._git_provenance(str(tmp_path)) == (sha, False)
-    # untracked file -> still clean (can't change timings)
-    (tmp_path / "scratch.txt").write_text("z\n")
-    assert bench._git_provenance(str(tmp_path)) == (sha, False)
-    # real code modification -> dirty
-    (tmp_path / "code.py").write_text("changed\n")
-    assert bench._git_provenance(str(tmp_path)) == (sha, True)

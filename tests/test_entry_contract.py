@@ -1,20 +1,5 @@
-"""Driver-contract regression tests for ``__spark_entry__``.
-
-The driver verifies the FIRST 50 entries of ``queries()`` in dict
-insertion order (proven by CORRECTNESS_r02.json).  Round 2's rotation
-built the dict in canonical-name order, so 43 of 50 slots re-verified
-already-green queries.  These tests pin the fixed behavior: insertion
-order equals (is-driver-green, staleness, has-no-oracle,
-rotated-lexical) order — the green half re-verifies oldest driver-green
-round first (_driver_ledger, round-9 verdict task 1).
-After round 10 every registry name is driver-green (r01..r10
-cumulative ledger; CORRECTNESS_r10 re-greened the t90/t92/t93
-re-entries, landed u11..u14, and recorded q90's rows-only
-``no_oracle`` row). The round-11 window is therefore fresh entries
-first (none unless this round registers new ones), then rotated-green
-re-verifications ordered by staleness — oldest driver-green round
-first, so the round-4-era q23..q27 execute-path rows lead.
-"""
+"""Contract tests for ``__spark_entry__``: ``queries()`` and
+``oracle_sql()`` expose the registry under its own names."""
 
 from __future__ import annotations
 
@@ -22,100 +7,13 @@ import importlib
 
 entry_mod = importlib.import_module("__spark_entry__")
 
-# Names with a green (or, for rows-only entries, recorded
-# ``no_oracle``) driver CORRECTNESS row in r01..r10 — the full
-# inventory as of round-11 open.
-_VERIFIED_PREFIXES = (
-    {f"q{i:02d}" for i in range(1, 28)}
-    | {f"q{i}" for i in range(30, 100)}
-    | {"q100"}
-    | {f"r{i}" for i in range(46, 51)}
-    | {"r55", "r56"}
-    | {f"r{i}" for i in range(57, 100)}
-    | {f"s{i:02d}" for i in range(1, 100)}
-    | {f"t{i:02d}" for i in range(1, 100)}
-    # u01..u14 all green: u11 re-greened in r11 after its
-    # STRING_TO_ARRAY re-spelling; the ten round-11 NULL-sort-position
-    # re-entries (q24/q27/s32/s37/s39/t94/t97/u03/u08/u12) re-greened
-    # in CORRECTNESS_r11 (50/50 hash green).
-    | {f"u{i:02d}" for i in range(1, 15)}
-)
-
-# Round 12: no rows-only re-entries pending.
-_ROWS_ONLY_FRESH: list[str] = []
-
-
-def test_first_50_insertion_order_are_never_verified():
-    keys = list(entry_mod.queries())
-    oracles = set(entry_mod.oracle_sql())
-    window = keys[:50]
-    fresh_oracle = sorted(k for k in keys if not k.startswith("z") and k in oracles)
-    fresh_rows_only = sorted(
-        k for k in keys if not k.startswith("z") and k not in oracles
-    )
-    assert fresh_rows_only == _ROWS_ONLY_FRESH
-    n_fresh = len(fresh_oracle) + len(fresh_rows_only)
-    assert window[:n_fresh] == fresh_oracle + fresh_rows_only
-    # The spare slots go to rotated (already-green) names, stalest
-    # first: the round-11 window's green half leads with the oldest
-    # driver rows in the regenerated ledger.
-    assert all(k.startswith("z") for k in window[n_fresh:])
-    inv = {"z" + n[1:]: n for n in entry_mod.load_all()}
-    rounds = [entry_mod.LAST_GREEN_ROUND[inv[k]] for k in window[n_fresh:]]
-    assert rounds == sorted(rounds)
-    min_round = min(entry_mod.LAST_GREEN_ROUND.values())
-    assert rounds and rounds[0] == min_round
-
-
-def test_rotated_names_cover_all_driver_green():
-    registered = set(entry_mod.load_all())
-    keys = set(entry_mod.queries())
-    green = {
-        n for n in registered
-        if n.split("_", 1)[0] in entry_mod._DRIVER_GREEN
-    }
-    # Every registered green name is exposed under its z-rotation (and
-    # never under its own name); every non-green name is exposed as-is.
-    for n in green:
-        assert "z" + n[1:] in keys and n not in keys, n
-    for n in registered - green:
-        assert n in keys and "z" + n[1:] not in keys, n
-    # The pinned ledger matches the live one for registered prefixes
-    # (_DRIVER_GREEN is range-built, so it may hold prefixes with no
-    # registered query — e.g. r69 — which are inert).
-    reg_prefixes = {n.split("_", 1)[0] for n in registered}
-    assert (
-        set(entry_mod._DRIVER_GREEN) & reg_prefixes
-        == _VERIFIED_PREFIXES & reg_prefixes
-    )
-
-
-def test_insertion_order_is_green_last_then_no_oracle_then_lexical():
-    keys = list(entry_mod.queries())
-    oracles = set(entry_mod.oracle_sql())
-    # inverse rotation: exposed z-name -> registry name (unique; the
-    # collision guard in queries() enforces it)
-    inv = {"z" + n[1:]: n for n in entry_mod.load_all()}
-    expected = sorted(
-        keys,
-        key=lambda k: (
-            k.startswith("z"),
-            entry_mod.LAST_GREEN_ROUND.get(inv.get(k, k), 0)
-            if k.startswith("z")
-            else 0,
-            k not in oracles,
-            k,
-        ),
-    )
-    assert keys == expected
-    # Within each (green, oracle) group the order is lexical, so the
-    # rotation window advances deterministically round to round.
-    fresh_oracle = [k for k in keys if not k.startswith("z") and k in oracles]
-    assert fresh_oracle == sorted(fresh_oracle)
-
 
 def test_oracle_keys_subset_of_query_keys():
-    q = set(entry_mod.queries())
+    names = list(entry_mod.queries())
+    # every registry entry is exposed, in sorted order, so none can
+    # drop out silently
+    assert names == sorted(entry_mod.load_all())
+    q = set(names)
     o = set(entry_mod.oracle_sql())
     assert o <= q
     # Rows-only entries are the genuinely non-SQL-expressible ops only:
@@ -124,84 +22,13 @@ def test_oracle_keys_subset_of_query_keys():
     # decoding.  Pinned exactly so a new query can't silently ship
     # without an oracle.
     assert q - o == {
-        "z47_bpe_learn_merges",
-        "z68_stream_welford_anomalies",
-        "z81_hll_sketch_rollup",
-        "z52_stream_window_percentiles",
-        "z82_stream_running_totals",
-        "z89_distinct_sketch",
-        "z90_multimodal_features",
-        "z91_multimodal_frames",
-        "z93_approx_ntile",
+        "q82_stream_running_totals",
+        "q89_distinct_sketch",
+        "q90_multimodal_features",
+        "q91_multimodal_frames",
+        "q93_approx_ntile",
+        "s47_bpe_learn_merges",
+        "s68_stream_welford_anomalies",
+        "s81_hll_sketch_rollup",
+        "t52_stream_window_percentiles",
     }
-
-
-def _load_gen_module():
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "gen_driver_ledger", os.path.join(repo, "scripts", "gen_driver_ledger.py")
-    )
-    gen = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gen)
-    return gen
-
-
-def test_staleness_ledger_fresh_and_covers_green():
-    """The committed _driver_ledger.py must equal a fresh derivation
-    from the git-TRACKED CORRECTNESS_r*.json (catches forgetting to
-    re-run scripts/gen_driver_ledger.py after a driver round's file is
-    committed — but does NOT red the suite when the driver drops an
-    UNTRACKED new-round file between rounds; round-10 verdict task 2).
-    Every driver-green registry name must carry a staleness row (a
-    missing row would silently sort that name as round-0-stale and burn
-    re-verification slots on it every round)."""
-    gen = _load_gen_module()
-    assert gen.derive(tracked_only=True) == entry_mod.LAST_GREEN_ROUND
-    for n in entry_mod.load_all():
-        if n.split("_", 1)[0] in entry_mod._DRIVER_GREEN:
-            assert n in entry_mod.LAST_GREEN_ROUND, n
-
-
-def test_staleness_pin_tolerates_untracked_new_round():
-    """Simulates the round-open state that redded round 10: the driver
-    writes CORRECTNESS_r{N+1}.json but nothing is committed yet. The
-    tracked-only derivation (what the pin compares) must ignore it; the
-    default derivation (what the CLI regen uses) must pick it up."""
-    import json
-    import os
-
-    gen = _load_gen_module()
-    some_name = next(iter(entry_mod.load_all()))
-    fake = os.path.join(gen.REPO, "CORRECTNESS_r98.json")
-    assert not os.path.exists(fake)
-    try:
-        with open(fake, "w") as f:
-            json.dump(
-                {
-                    some_name: {
-                        "rows_match": True,
-                        "schema_match": True,
-                        "hash_match": True,
-                        "spark_rows": 1,
-                        "oracle_rows": 1,
-                        "err": None,
-                    }
-                },
-                f,
-            )
-        tracked = gen.derive(tracked_only=True)
-        fresh = gen.derive()
-        # untracked new-round file: invisible to the pin...
-        assert tracked == entry_mod.LAST_GREEN_ROUND
-        assert tracked[some_name] < 98
-        # ...but the regen CLI sees it (so round-open regen works even
-        # before the file is committed).
-        assert fresh[some_name] == 98
-        assert {k: v for k, v in fresh.items() if k != some_name} == {
-            k: v for k, v in tracked.items() if k != some_name
-        }
-    finally:
-        os.remove(fake)

@@ -1226,6 +1226,12 @@ def test_multi_statement_structural_rewrites_stay_per_statement():
     )
     f2, s2 = out2.split(";")
     assert "LIMIT 3" in f2 and "LIMIT" not in s2
+    # a ';' inside a literal or inside parentheses is not a break
+    out3 = transpile(
+        "SELECT TOP 2 a FROM f(';', (1; 2)) s; SELECT b FROM t2", "tsql"
+    )
+    assert "f(';', (1; 2)) s LIMIT 2;" in out3
+    assert out3.endswith("; SELECT b FROM t2")
 
 
 def test_qualify_with_window_clause_stays_in_scope(spark):
@@ -1945,6 +1951,13 @@ def test_temp_table_as_and_multi_statement(spark):
         "SELECT 'a;b' AS v", tables={}, dialect="postgres", spark=spark
     ).collect()
     assert got[0]["v"] == "a;b"
+    # nor do semicolons inside parentheses; blank statements drop
+    from xorbits_sql_spark.core import _split_statements
+
+    assert _split_statements("SELECT ';(' AS v; SELECT f(1; 2) ;  ;") == [
+        "SELECT ';(' AS v",
+        " SELECT f(1; 2) ",
+    ]
 
 
 def test_pg_null_sort_position(spark):

@@ -368,19 +368,6 @@ def execute(
 def _split_statements(text: str) -> list[str]:
     """Split Spark SQL text on top-level ``;`` (paren-depth 0, outside
     literals/comments — the tokenizer guarantees the latter)."""
-    tokens = _dialect.tokenize_spark(text)
-    stmts: list[str] = []
-    buf: list[str] = []
-    depth = 0
-    for k, t in tokens:
-        if (k, t) == ("op", "("):
-            depth += 1
-        elif (k, t) == ("op", ")"):
-            depth -= 1
-        if (k, t) == ("op", ";") and depth == 0:
-            stmts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(t)
-    stmts.append("".join(buf))
-    return [s for s in stmts if s.strip()]
+    stmts = _dialect._split_top_level(_dialect.tokenize_spark(text), ";")
+    texts = ("".join(t for _, t in stmt) for stmt in stmts)
+    return [s for s in texts if s.strip()]

@@ -442,11 +442,13 @@ def _rewrite_top(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     return out
 
 
-def _split_top_level_commas(
-    tokens: list[tuple[str, str]]
+def _split_top_level(
+    tokens: list[tuple[str, str]], sep: str
 ) -> list[list[tuple[str, str]]]:
-    """Split a token run at depth-0 commas (select lists, ORDER BY
-    item lists)."""
+    """Split a token run at depth-0 ``sep`` operators: ',' for select
+    lists and ORDER BY item lists, ';' for statements. Literals and
+    comments are single tokens, so a separator inside one never
+    splits."""
     items: list[list[tuple[str, str]]] = [[]]
     depth = 0
     for kind, text in tokens:
@@ -454,7 +456,7 @@ def _split_top_level_commas(
             depth += 1
         elif kind == "op" and text == ")":
             depth -= 1
-        if depth == 0 and (kind, text) == ("op", ","):
+        if depth == 0 and (kind, text) == ("op", sep):
             items.append([])
             continue
         items[-1].append((kind, text))
@@ -496,7 +498,7 @@ def _select_list_aliases(
     of the expression more often than an alias in the forms this
     serves)."""
     out: dict[str, list[tuple[str, str]]] = {}
-    for item in _split_top_level_commas(items):
+    for item in _split_top_level(items, ","):
         code = [
             (p, tok) for p, tok in enumerate(item)
             if tok[0] not in ("ws", "comment")
@@ -816,7 +818,7 @@ def _top_variant_to_qualify(
     # separable items resolve: ``expr AS alias`` (alias stripped) or a
     # single-token item; anything else (implicit aliases, ``*``) is
     # ambiguous at token level and refuses loudly.
-    for item in _split_top_level_commas(order_exprs):
+    for item in _split_top_level(order_exprs, ","):
         code = _strip_sort_suffix(item)
         if _is_constant_sort_item(code):
             raise UnsupportedError(
@@ -825,13 +827,13 @@ def _top_variant_to_qualify(
             )
     positional = any(
         len(code) == 1 and code[0][0] == "number" and code[0][1].isdigit()
-        for item in _split_top_level_commas(order_exprs)
+        for item in _split_top_level(order_exprs, ",")
         for code in [_strip_sort_suffix(item)]
     )
     if positional:
-        select_items = _split_top_level_commas(tokens[end + 1 : from_at])
+        select_items = _split_top_level(tokens[end + 1 : from_at], ",")
         rebuilt_pos: list[list[tuple[str, str]]] = []
-        for item in _split_top_level_commas(order_exprs):
+        for item in _split_top_level(order_exprs, ","):
             code_at = [
                 i for i, tok in enumerate(item)
                 if tok[0] not in ("ws", "comment")
@@ -895,7 +897,7 @@ def _top_variant_to_qualify(
     aliases = {} if wrap_scope else _select_list_aliases(tokens[end + 1 : from_at])
     if aliases:
         rebuilt: list[list[tuple[str, str]]] = []
-        for item in _split_top_level_commas(order_exprs):
+        for item in _split_top_level(order_exprs, ","):
             code_at = [
                 i for i, tok in enumerate(item)
                 if tok[0] not in ("ws", "comment")
@@ -934,7 +936,7 @@ def _top_variant_to_qualify(
         # Validate: every item must be an output column name (ordinals
         # were already rewritten to one above). A star select item
         # projects every source column, so validation is skipped.
-        select_items = _split_top_level_commas(tokens[end + 1 : from_at])
+        select_items = _split_top_level(tokens[end + 1 : from_at], ",")
 
         def _is_star_item(it: list[tuple[str, str]]) -> bool:
             # only a bare top-level `*` or a qualified `name.*` projects
@@ -959,7 +961,7 @@ def _top_variant_to_qualify(
                 name = _item_output_name(it)
                 if name is not None:
                     out_names.add(_ident_key(name))
-            for item in _split_top_level_commas(order_exprs):
+            for item in _split_top_level(order_exprs, ","):
                 code = _strip_sort_suffix(item)
                 # parenthesized single-name items come from the ordinal
                 # rewrite: ( name )
@@ -2679,7 +2681,7 @@ def _rewrite_distinct_on_one(
         ):
             items_end = i
             break
-    items = _split_top_level_commas(tokens[items_start:items_end])
+    items = _split_top_level(tokens[items_start:items_end], ",")
     if len(items) < len(key_code):
         raise UnsupportedError(
             "SELECT DISTINCT ON expressions must match initial ORDER BY "
@@ -5962,20 +5964,9 @@ def _fallback_normalize(sql: str, dialect: str | None) -> str:
     # statement, a QUALIFY wrap anchors to the FIRST SELECT). Split at
     # depth-0 ';' and normalize each statement independently — the
     # same multi-statement support the sqlglot path has.
-    stmts: list[list[tuple[str, str]]] = []
-    depth, start = 0, 0
-    for i, (k, t) in enumerate(tokens):
-        if (k, t) == ("op", "("):
-            depth += 1
-        elif (k, t) == ("op", ")"):
-            depth -= 1
-        elif (k, t) == ("op", ";") and depth == 0:
-            stmts.append(tokens[start:i])
-            start = i + 1
-    if stmts:  # at least one top-level ';' found
-        stmts.append(tokens[start:])
-        return ";".join(_normalize_stmt(s, dialect) for s in stmts)
-    return _normalize_stmt(tokens, dialect)
+    return ";".join(
+        _normalize_stmt(stmt, dialect) for stmt in _split_top_level(tokens, ";")
+    )
 
 
 def _normalize_stmt(tokens: list[tuple[str, str]], dialect: str | None) -> str:

@@ -167,12 +167,12 @@ def _in_threads(fns):
 
     # Passing the session makes inheritable_thread_target also carry
     # session tags (Spark 4 signature); without it every call warns.
+    # With pinned threads off it returns its argument unchanged — the
+    # session, not a decorator — so fall back to the bare form.
     session = SparkSession.getActiveSession()
-    wrap = (
-        inheritable_thread_target(session)
-        if session is not None
-        else inheritable_thread_target
-    )
+    wrap = inheritable_thread_target
+    if session is not None and callable(outer := inheritable_thread_target(session)):
+        wrap = outer
     with ThreadPoolExecutor(max_workers=len(fns)) as pool:
         futs = [pool.submit(wrap(f)) for f in fns]
         return [f.result() for f in futs]

@@ -154,9 +154,12 @@ def pagerank(
     the rank table (which also lost its outgoing mass in later
     rounds), and a dangling node (no out-edges) redistributes its mass
     evenly — the standard correction, so ranks sum to 1 on any
-    directed input. The node count enters the formula via a one-row
-    broadcast aggregate; the only driver-side read is one scalar
-    existence probe of the (persisted) dangling-node table.
+    directed input. The node count N is a driver scalar from one
+    ``nodes.count()`` job, used as a plain divisor; the dangling-mass
+    aggregate (a one-row broadcast) is the only per-round broadcast.
+    The other driver-side reads are one edge count (sizes the loop's
+    shuffles) and one existence probe of the (persisted) dangling-node
+    table.
 
     ``symmetric=True`` is the caller's assertion that every node
     appears as BOTH a source and a destination (true whenever the

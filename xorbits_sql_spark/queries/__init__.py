@@ -8,8 +8,8 @@ extensions) is represented by at least one named query. Each entry pairs
 * ``oracle`` — equivalent ANSI SQL for DuckDB over the same parquet
   tables (``None`` for non-SQL-expressible ops: streaming, stateful).
 
-The driver consumes this via ``__spark_entry__.queries()`` /
-``oracle_sql()``; tests consume it via ``tests/test_oracle_parity.py``.
+``__spark_entry__.queries()`` / ``oracle_sql()`` expose it under the
+registry names; ``tests/test_oracle_parity.py`` checks it.
 
 Cross-engine determinism rules used throughout (validated bit-exact
 against DuckDB 1.0):

@@ -1,13 +1,7 @@
-"""JPEG-codec and round-8 dialect-rewrite queries (u04–u07).
+"""JPEG-codec and dialect-rewrite queries (u04–u07).
 
-Written and parity-tested in round 8 but held unregistered until
-round 9: the round-8 verification window was frozen at exactly the 50
-remaining never-driver-verified names, and a new oracle-bearing entry
-would have sorted ahead of the four rows-only names and pushed one out
-of the window (``__spark_entry__._exposed``). UNFROZEN in round 9 per
-the playbook written at round-8 close: these four entries now
-``register`` into the live registry (this module is imported by
-``load_all``) and lead the round-9 window behind the t66 re-entry.
+These entries ``register`` into the live registry like every other
+query module (``load_all`` imports this one).
 
 The JPEG oracle trick: DuckDB cannot decode JPEG, but a CONSTANT-color
 image round-trips the DCT exactly when the quantized DC step divides
